@@ -2013,7 +2013,7 @@ object LlmOps {
     // round-trips exact doubles, and the local argmax is the pinned
     // equal of the crossJoin shape.
     val emb = kmeansInput(emb0)
-    var cents = toLocalRelation(kmeansSeed(emb, c))
+    var cents = kmeansSeed(emb, c)
     for (_ <- 1 to iters)
       cents = toLocalRelation(updateCentroids(assignCells(emb, cents), c))
     cents
@@ -2083,15 +2083,19 @@ object LlmOps {
       .withColumn("nrm", sqrt(dot("embedding", "embedding")))
       .filter(col("nrm") > 0)
 
-  /** Seed centroids: the `c` smallest vec_ids, cid = rank. The rank window
-    * runs over the already-limited c-row frame — bounded by construction,
-    * never the corpus.
+  /** Seed centroids: the `c` smallest vec_ids, cid = rank — ONE bounded
+    * top-c collect (≤ c rows by the literal), the rank assigned on the
+    * driver, returned as a local relation (no window exchange).
     */
   private def kmeansSeed(emb: DataFrame, c: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))
-    emb.orderBy(col("vec_id")).limit(c)
-      .select((row_number().over(w) - 1).as("cid"),
-        col("embedding").cast("array<double>").as("cvec"))
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val top = emb.orderBy(col("vec_id")).limit(c)
+      .select(col("embedding").cast("array<double>").as("cvec"))
+    val rows = top.collect().toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) }
+    emb.sparkSession.createDataFrame(rows.asJava,
+      StructType(StructField("cid", IntegerType, nullable = false) +: top.schema.fields))
   }
 
   /** Centroids + norm, zero-norm cells dropped (an empty/degenerate cell
@@ -2115,7 +2119,7 @@ object LlmOps {
         val kept = cs.map { case (cid, cv) => (cid, l2norm(cv), cv) }
           .filter(_._2 > 0)
         val dims = kept.map(_._3.length).distinct
-        if (kept.nonEmpty && kept.size <= MaxLocalAssignCells && dims.size == 1)
+        if (kept.nonEmpty && dims.size == 1 && fitsLocalCentroids(kept.size, dims.head))
           assignCellsLocal(emb, kept, cents.schema("cid").dataType)
         else assignCellsJoin(emb, cents)
       case None => assignCellsJoin(emb, cents)
@@ -2124,7 +2128,7 @@ object LlmOps {
   /** The r14 crossJoin + groupBy argmax shape — the fallback when the
     * centroid table is not a bounded local relation (or is degenerate:
     * empty after the zero-norm drop, mixed-dim, over
-    * [[MaxLocalAssignCells]]).
+    * [[LocalCentroidMaxBytes]]).
     */
   private def assignCellsJoin(emb: DataFrame, cents: DataFrame): DataFrame =
     argmaxCell(emb,
@@ -2132,14 +2136,18 @@ object LlmOps {
         .select(col("vec_id"), col("cid"),
           (dot("embedding", "cvec") / (col("nrm") * col("cnrm"))).as("ccos_raw")))
 
-  /** Cells bound for the JOIN-FREE local assignment path: the flattened
-    * centroid matrix rides the plan as a literal installed into codegen as
-    * a reference object — 4096 cells × 64 dims × 8 B = 2 MB, comfortably a
-    * task-binary-sized constant. Flat assignment above
-    * [[HierAssignCrossoverC]] only happens under `exact = true`; past THIS
-    * bound the crossJoin shape takes over (broadcast transport).
+  /** Byte bound (cells × dim × 8 B) on a centroid table used driver-side:
+    * the JOIN-FREE local assignment path bakes the flattened matrix into
+    * codegen as a literal reference object, and the driver probe ranking
+    * ([[probeCells]]) holds it in driver memory. 2 MiB (4096 cells × 64
+    * dims, or 256 cells × 1024 dims) is comfortably a task-binary-sized
+    * constant. Past it assignment takes the crossJoin shape (broadcast
+    * transport) and probe ranking stays distributed.
     */
-  private[graft] val MaxLocalAssignCells = 4096
+  private[graft] val LocalCentroidMaxBytes: Long = 2L * 1024 * 1024
+
+  private[graft] def fitsLocalCentroids(cells: Long, dim: Long): Boolean =
+    cells * dim * 8 <= LocalCentroidMaxBytes
 
   /** The centroid rows of a driver-LOCAL centroid table — Some only when
     * the plan is already a LocalRelation ([[kmeansCentroids]] /
@@ -2168,11 +2176,14 @@ object LlmOps {
   /** sqrt(graft_dot(v, v)) driver-side: index-order double accumulation —
     * the identical arithmetic [[withCnorm]] computes per row.
     */
-  private def l2norm(v: Array[Double]): Double = {
+  private def l2norm(v: Array[Double]): Double = math.sqrt(dotLocal(v, v))
+
+  /** graft_dot driver-side: index-order double accumulation. */
+  private def dotLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s)
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
   }
 
   /** Flat assignment as ONE codegen'd projection (r16, guide §2.4): the
@@ -2445,13 +2456,19 @@ object LlmOps {
     * One tiny action over the bounded c-row table.
     */
   private[graft] def centroidGate(cents: DataFrame): Unit = {
-    val row = cents.agg(count(lit(1)), max(size(col("cvec")))).head()
-    val c = row.getLong(0)
-    val dim = if (row.isNullAt(1)) 0L else row.getInt(1).toLong
+    val (c, dim) = centroidShape(cents)
     val est = c * dim * 8 * 2
     require(est <= CentroidBudgetBytes,
       s"centroid table over CentroidBudgetBytes: c=$c dim=$dim est=$est B " +
         s"> $CentroidBudgetBytes B — shard the index or raise the budget")
+  }
+
+  /** (cells, max dim) of a centroid table — one tiny action over the
+    * bounded c-row table.
+    */
+  private def centroidShape(cents: DataFrame): (Long, Long) = {
+    val row = cents.agg(count(lit(1)), max(size(col("cvec")))).head()
+    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getInt(1).toLong)
   }
 
   /** [[ivfSearchKmeans]] with c chosen by [[kmeansAutoC]]. `corpusSizeHint`
@@ -2499,30 +2516,140 @@ object LlmOps {
       .orderBy(col("cos").desc, col("vec_id")).limit(k)
   }
 
-  /** Bound on the query-batch side of [[ivfSearchBatch]]: the batch (and
-    * its Q×nprobe probe list) broadcasts, so it must stay
-    * executor-memory-sized. 4096 queries × 64 dims × 8 B ≈ 2 MB — far
-    * inside any broadcast budget; a bigger stream should be windowed into
-    * batches upstream.
+  /** Bound on a query batch ([[probeCells]]): the batch is collected to
+    * the driver and broadcast back with its Q×nprobe probe list, so it
+    * must stay executor-memory-sized. 4096 queries × 64 dims × 8 B ≈ 2 MB
+    * — far inside any broadcast budget; a bigger stream should be windowed
+    * into batches upstream.
     */
   val QueryBatchMaxRows = 4096
+
+  /** A query batch and the cells it probes, both driver-local relations:
+    * `queries` (qid, qv, qnrm) — ≤ [[QueryBatchMaxRows]] rows; `probes`
+    * (qid, cid) — ≤ Q·nprobe rows; `cids` — the distinct probed cells.
+    */
+  private[graft] final case class ProbePlan(queries: DataFrame, probes: DataFrame,
+                                            cids: Seq[Int])
+
+  /** The probe step every IVF search entry point shares
+    * ([[ivfSearchBatch]], [[annAssignedSearch]], [[annAssignedSearchBatch]]).
+    * `q0` is (qid, qv: array<double>).
+    *
+    * The batch is collected ONCE — zero-norm queries dropped (cosine is
+    * undefined), a qid-ordered `limit` one row past the gate so the
+    * [[QueryBatchMaxRows]] check needs no count job. Both sides of the Q×c
+    * ranking are then bounded by literals, so it runs on the driver
+    * against the local centroid table with the executor arithmetic's
+    * driver twins (index-order dot, [[l2norm]], [[round6d]]) and graft_topk's
+    * order: Spark's double ordering (NaN largest, -0.0 = 0.0), ties to the
+    * smaller cid, null cosines (mismatched dims) skipped, zero-norm cells
+    * dropped as [[withCnorm]] does. No Spark job ranks anything.
+    *
+    * Scale gate: a lazy centroid lineage is collected first when it fits
+    * [[LocalCentroidMaxBytes]]; past that bound (lazy or local) the ranking
+    * runs distributed — the graft_topk heap per query — and only its
+    * ≤ Q·nprobe probe rows are collected.
+    */
+  private[graft] def probeCells(q0: DataFrame, cents: DataFrame,
+                                nprobe: Int): ProbePlan = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val spark = q0.sparkSession
+    val qSel = ensureFns(q0).withColumn("qnrm", sqrt(dot("qv", "qv")))
+      .filter(col("qnrm") > 0)
+    // ordered, so the bounded collect is ONE take-ordered job (a bare
+    // limit scans partitions in scale-up rounds, one job each); `qv` keeps
+    // the order non-foldable when qid is a literal (the single-query path)
+    val qRows = qSel.orderBy(col("qid"), col("qv")).limit(QueryBatchMaxRows + 1)
+      .collect().toSeq
+    require(qRows.length <= QueryBatchMaxRows,
+      s"query batch exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
+        "window the query stream into bounded batches upstream")
+    val q = spark.createDataFrame(qRows.asJava, qSel.schema)
+    val probeRows: Seq[Row] = boundedCentroids(cents) match {
+      case Some(cs) =>
+        // Spark SQL's `cnrm > 0` is true for NaN (NaN sorts largest)
+        val kept = cs.map { case (cid, cv) => (cid, l2norm(cv), cv) }
+          .filter { case (_, n, _) => n > 0 || n.isNaN }
+        qRows.flatMap { r =>
+          val qv = r.getSeq[Double](1).toArray
+          val qn = r.getDouble(2)
+          kept.collect { case (cid, cn, cv) if cv.length == qv.length =>
+            (round6d(dotLocal(qv, cv) / (qn * cn)), cid)
+          }.sorted(probeOrder).take(nprobe).map { case (_, cid) => Row(r.get(0), cid) }
+        }
+      case None =>
+        q.crossJoin(broadcast(withCnorm(cents)))
+          .select(col("qid"), col("cid"),
+            round6(dot("qv", "cvec") / (col("qnrm") * col("cnrm"))).as("ccos"))
+          .groupBy(col("qid"))
+          .agg(expr(s"graft_topk(ccos, cid, $nprobe)").as("p"))
+          .select(col("qid"), explode(col("p")).as("x"))
+          .select(col("qid"), col("x.id").cast("int")).collect().toSeq
+    }
+    val probes = spark.createDataFrame(probeRows.asJava, StructType(Seq(
+      qSel.schema("qid"), StructField("cid", IntegerType, nullable = false))))
+    ProbePlan(q, probes, probeRows.map(_.getInt(1)).distinct)
+  }
+
+  /** (ccos desc, cid asc) under Spark's double ordering: NaN largest,
+    * -0.0 == 0.0 — the order graft_topk keeps.
+    */
+  private val probeOrder: Ordering[(Double, Int)] = (a, b) => {
+    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(b._1, a._1)
+    if (c != 0) c else Integer.compare(a._2, b._2)
+  }
+
+  /** A centroid table's rows for driver-side use, within
+    * [[LocalCentroidMaxBytes]]: a local table's rows as they are, a lazy
+    * lineage collected once after a one-row size aggregate. None past the
+    * gate or off the narrow (int cid, array<double> cvec) contract.
+    */
+  private def boundedCentroids(cents: DataFrame): Option[Seq[(Int, Array[Double])]] = {
+    def fits(cs: Seq[(Int, Array[Double])]): Boolean =
+      fitsLocalCentroids(cs.size, cs.map(_._2.length).foldLeft(0)(math.max))
+    if (localRowCount(cents).isDefined) localCentroids(cents).filter(fits)
+    else {
+      val (cells, dim) = centroidShape(cents)
+      if (!fitsLocalCentroids(cells, dim)) None
+      else localCentroids(toLocalRelation(cents.select(col("cid"), col("cvec"))))
+        .filter(fits)
+    }
+  }
+
+  /** Per-query top-k over the probed cells of an assignment (the shared
+    * tail of the batched search paths): the probe list EQUI-joins the
+    * assignment on `cid` — each vector fans out only to the queries that
+    * probed its cell — then per-(query, vector) cosine and the
+    * `graft_topk` bounded heap (map-side eviction; the final exchange
+    * carries Q·k rows, never a global sort). Output: (qid, vec_id, cos).
+    */
+  private def probedTopK(assigned: DataFrame, p: ProbePlan, k: Int): DataFrame =
+    assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
+      .join(broadcast(p.probes), "cid")
+      .join(broadcast(p.queries), "qid")
+      .select(col("qid"), col("vec_id"),
+        round6(dot("embedding", "qv") / (col("nrm") * col("qnrm"))).as("cos"))
+      .groupBy(col("qid"))
+      .agg(expr(s"graft_topk(cos, vec_id, $k)").as("nn"))
+      .select(col("qid"), explode(col("nn")).as("x"))
+      .select(col("qid"), col("x.id").as("vec_id"), col("x.score").as("cos"))
 
   /** BATCHED trained-IVF search — the query-THROUGHPUT serving shape.
     * [[ivfSearchKmeansWith]] (and the per-query store path
     * [[annAssignedSearch]]) answer ONE query per corpus pass; a real
     * serving job holds a batch of Q queries, and running Q independent
     * jobs pays Q corpus touches. Here the corpus is touched ONCE for the
-    * whole batch:
+    * whole batch.
     *
-    *   1. every query ranks the bounded c-row centroid table (a Q×c
-    *      nested-loop over two broadcast-sized sides) and keeps its
-    *      top-`nprobe` cells — Q·nprobe (qid, cid) probe rows;
-    *   2. the probe list EQUI-joins the corpus assignment on `cid` — no
-    *      per-query scan: each vector fans out only to the queries that
-    *      probed its cell (expected Q·nprobe/c replicas per vector);
-    *   3. per-(query, vector) cosine, then per-query top-k via the
-    *      `graft_topk` bounded-heap aggregate — map-side eviction, the
-    *      final exchange carries Q·k rows, never a global sort.
+    * Scale shape: the batch (≤ [[QueryBatchMaxRows]]) ranks the bounded
+    * c-row centroid table on the driver ([[probeCells]] — one collect of
+    * the batch, no ranking job below [[LocalCentroidMaxBytes]]); the
+    * Q·nprobe probe list and the batch return as broadcast local
+    * relations, and [[probedTopK]] joins them to the corpus assignment —
+    * one corpus pass, one Q·k exchange.
     *
     * Per-query semantics are IDENTICAL to [[ivfSearchKmeansWith]] at the
     * same (cents, nprobe, k) BELOW [[HierAssignCrossoverC]] — round6
@@ -2531,41 +2658,16 @@ object LlmOps {
     * [[kmeansAssignAuto]]'s two-level path — the same rule every other
     * serving/maintenance path uses (and exact on clustered corpora, the
     * regime a trained index exists for), instead of paying the flat
-    * c-dots-per-vector wall the crossover exists to avoid. The batch is
-    * gated at [[QueryBatchMaxRows]] (the broadcast contract); compose
-    * with a cid-partitioned assignment store for the no-reassign form —
-    * the probe join prunes the same way.
+    * c-dots-per-vector wall the crossover exists to avoid. Compose with a
+    * cid-partitioned assignment store ([[annAssignedSearchBatch]]) for
+    * the no-reassign form.
     * Output: (qid, vec_id, cos), k rows per query.
     */
   def ivfSearchBatch(emb0: DataFrame, queries: DataFrame, cents: DataFrame,
                      nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(queries)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qnrm", sqrt(expr("graft_dot(qv, qv)")))
-      .filter(col("qnrm") > 0)
-    val qn = q.count()
-    require(qn <= QueryBatchMaxRows,
-      s"query batch $qn exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
-        "window the query stream into bounded batches upstream")
-    val probed = q.crossJoin(broadcast(withCnorm(cents)))
-      .select(col("qid"), col("cid"),
-        round6(expr("graft_dot(qv, cvec)") /
-          (col("qnrm") * col("cnrm"))).as("ccos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"transform(slice(array_sort(collect_list(struct(-ccos AS nc, cid))), 1, $nprobe), x -> x.cid)")
-        .as("cids"))
-      .select(col("qid"), explode(col("cids")).as("cid"))
-    kmeansAssignAuto(emb0, cents)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
-      .join(broadcast(probed), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"),
-        round6(dot("embedding", "qv") / (col("nrm") * col("qnrm"))).as("cos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"graft_topk(cos, vec_id, $k)").as("nn"))
-      .select(col("qid"), explode(col("nn")).as("x"))
-      .select(col("qid"), col("x.id").as("vec_id"), col("x.score").as("cos"))
+    val p = probeCells(queries.select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qv")), cents, nprobe)
+    probedTopK(kmeansAssignAuto(emb0, cents), p, k)
   }
 
   /** SemDeDup-style semantic dedup over TRAINED cells (Abbas et al. 2023,
@@ -2797,35 +2899,33 @@ object LlmOps {
   }
 
   /** Serve one query from the cell-partitioned assignment store: rank the
-    * c centroids against the query (bounded — cents is the local c-row
-    * table), collect the top-`nprobe` cell ids (nprobe ints, bounded by
-    * the literal), and scan ONLY those cells — the `cid IN (...)`
-    * literals hit the hive partition filter, so the parquet reader never
-    * lists, opens, or materializes any other cell (partition pruning
-    * asserted from task input metrics in AnnIndexSpec). Output is
+    * c centroids against the query on the driver ([[probeCells]] — one
+    * collect of the query row, no ranking job below
+    * [[LocalCentroidMaxBytes]]) and scan ONLY the top-`nprobe` cells —
+    * the `cid IN (...)` literals hit the hive partition filter, so the
+    * parquet reader never lists, opens, or materializes any other cell
+    * (partition pruning asserted from task input metrics in AnnIndexSpec).
+    * The query returns as a broadcast 1-row local relation. Output is
     * row-identical to [[ivfSearchKmeansWith]] at the same
     * (cents, nprobe, k) — spec-pinned — when the store holds the FLAT
     * assignment: always below [[HierAssignCrossoverC]], at any c with
     * `writeAnnAssignments(…, exact = true)`, and on clustered corpora
     * either way. A default (auto) store above the crossover holds the
     * two-level assignment, and results follow THAT assignment — the
-    * documented approximation every auto-path consumer shares.
+    * documented approximation every auto-path consumer shares. A
+    * zero-norm query probes nothing (cosine is undefined) and returns no
+    * rows.
     */
   def annAssignedSearch(spark: org.apache.spark.sql.SparkSession,
                         assignPath: String, cents: DataFrame,
                         query: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(query).select(col("embedding").as("qv"))
-    val probedCids = withCnorm(cents).crossJoin(broadcast(q))
-      .select(col("cid"),
-        round6(expr("graft_dot(cvec, qv)") /
-          (col("cnrm") * sqrt(expr("graft_dot(qv, qv)")))).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid")).limit(nprobe)
-      .collect().map(_.getInt(0)).toSeq
+    val p = probeCells(query.select(lit(0L).as("qid"),
+      col("embedding").cast("array<double>").as("qv")), cents, nprobe)
     spark.read.parquet(assignPath)
-      .filter(col("cid").isin(probedCids.map(c => c: Any): _*))
-      .crossJoin(broadcast(q))
+      .filter(col("cid").isin(p.cids.map(c => c: Any): _*))
+      .crossJoin(broadcast(p.queries))
       .select(col("vec_id"), col("cid").cast("int").as("cid"),
-        round6(dot("embedding", "qv") / (col("nrm") * sqrt(dot("qv", "qv")))).as("cos"))
+        round6(dot("embedding", "qv") / (col("nrm") * col("qnrm"))).as("cos"))
       .orderBy(col("cos").desc, col("vec_id")).limit(k)
   }
 
@@ -2839,46 +2939,23 @@ object LlmOps {
     * bytes are (distinct probed cells)/c of the corpus (task input
     * metrics pinned in the spec).
     *
+    * Scale shape: one collect of the batch (≤ [[QueryBatchMaxRows]]),
+    * the Q×c probe ranking on the driver ([[probeCells]]), then one
+    * pruned store scan joined to the broadcast probe list and batch
+    * ([[probedTopK]]) — one Q·k exchange.
+    *
     * Per-query semantics are IDENTICAL to [[annAssignedSearch]] at the
-    * same (store, cents, nprobe, k) — spec-pinned. Bounded at
-    * [[QueryBatchMaxRows]]; the probed-cid collect is ≤ Q·nprobe ints.
+    * same (store, cents, nprobe, k) — spec-pinned.
     * Output: (qid, vec_id, cos), k rows per query.
     */
   def annAssignedSearchBatch(spark: org.apache.spark.sql.SparkSession,
                              assignPath: String, cents: DataFrame,
                              queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = ensureFns(queries)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qnrm", sqrt(expr("graft_dot(qv, qv)")))
-      .filter(col("qnrm") > 0)
-    val qn = q.count()
-    require(qn <= QueryBatchMaxRows,
-      s"query batch $qn exceeds QueryBatchMaxRows=$QueryBatchMaxRows — " +
-        "window the query stream into bounded batches upstream")
-    val probed = q.crossJoin(broadcast(withCnorm(cents)))
-      .select(col("qid"), col("cid"),
-        round6(expr("graft_dot(qv, cvec)") /
-          (col("qnrm") * col("cnrm"))).as("ccos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"transform(slice(array_sort(collect_list(struct(-ccos AS nc, cid))), 1, $nprobe), x -> x.cid)")
-        .as("cids"))
-      .select(col("qid"), explode(col("cids")).as("cid"))
-    // bounded: ≤ Q·nprobe ints — the partition-pruning literal set
-    val cids = probed.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(assignPath)
-      .filter(col("cid").isin(cids.map(c => c: Any): _*))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cid").cast("int").as("cid"))
-      .join(broadcast(probed), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"),
-        round6(dot("embedding", "qv") / (col("nrm") * col("qnrm"))).as("cos"))
-      .groupBy(col("qid"))
-      .agg(expr(s"graft_topk(cos, vec_id, $k)").as("nn"))
-      .select(col("qid"), explode(col("nn")).as("x"))
-      .select(col("qid"), col("x.id").as("vec_id"), col("x.score").as("cos"))
+    val p = probeCells(queries.select(col("vec_id").as("qid"),
+      col("embedding").cast("array<double>").as("qv")), cents, nprobe)
+    probedTopK(spark.read.parquet(assignPath)
+      .filter(col("cid").isin(p.cids.map(c => c: Any): _*))
+      .withColumn("cid", col("cid").cast("int")), p, k)
   }
 
   /** Mean assignment cosine of `emb0` against a centroid table — the
@@ -3686,14 +3763,27 @@ object LlmOps {
   }
 
   /** First row's signature length of the store at `path`, or None when the
-    * store doesn't exist yet. The store is k-uniform by construction
+    * store doesn't exist yet (an explicit existence check — any other read
+    * failure propagates). The store is k-uniform by construction
     * ([[writeSignatures]] validates appends), so one row suffices.
     */
   private def storeSigLen(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[Int] =
-    scala.util.Try(
-      spark.read.parquet(path).select(size(col("sig")).as("n")).head())
-      .toOption.map(_.getInt(0))
+    if (pathExists(spark, path)) sigLen(spark.read.parquet(path)) else None
+
+  private def sigLen(store: DataFrame): Option[Int] =
+    store.select(size(col("sig"))).limit(1).collect().headOption.map(_.getInt(0))
+
+  /** Whether `path` exists on its file system — the explicit "not written
+    * yet" probe of the store family, so a store that is absent reads as
+    * absent without a failed read (and its logged stack trace), while a
+    * store that exists but cannot be read fails loudly.
+    */
+  private[graft] def pathExists(spark: org.apache.spark.sql.SparkSession,
+                                path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   // ---- signature store lifecycle: delete / compact ----
 
@@ -3722,12 +3812,19 @@ object LlmOps {
     * side on its own byte stats, so no corpus-sized build arises.
     */
   def liveSignatures(spark: org.apache.spark.sql.SparkSession,
-                     path: String, idCol: String): DataFrame = {
-    val store = spark.read.parquet(path)
-    scala.util.Try(spark.read.parquet(storeTombstonePath(path))).toOption match {
-      case Some(ts) => store.join(ts.select(col(idCol)), Seq(idCol), "left_anti")
-      case None => store
-    }
+                     path: String, idCol: String): DataFrame =
+    withoutTombstones(spark.read.parquet(path), path, idCol)
+
+  /** `store` (the frame read from `path`) minus the tombstone sidecar when
+    * one exists; an existing but unreadable sidecar fails the read rather
+    * than resurrecting deleted docs.
+    */
+  private def withoutTombstones(store: DataFrame, path: String,
+                                idCol: String): DataFrame = {
+    val spark = store.sparkSession
+    val ts = storeTombstonePath(path)
+    if (!pathExists(spark, ts)) store
+    else store.join(spark.read.parquet(ts).select(col(idCol)), Seq(idCol), "left_anti")
   }
 
   /** Rewrite the store down to its live rows and clear the tombstones:
@@ -3768,15 +3865,17 @@ object LlmOps {
   def incrementalDupes(corpus: DataFrame, batch: DataFrame, idCol: String,
                        storePath: String, threshold: Double, k: Int = 8,
                        bands: Int = 4, r: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
+    // ONE store read (one schema inference) feeds both the k-check and
+    // the live view
+    val raw = corpus.sparkSession.read.parquet(storePath)
     // a store written with a different k would band to incomparable hashes
     // and the probe would silently find NOTHING — fail fast on mismatch
     // (one-row probe; the store is k-uniform, writeSignatures validates)
-    storeSigLen(spark, storePath).foreach(n => require(n == k,
+    sigLen(raw).foreach(n => require(n == k,
       s"signature store at $storePath has sig length $n but probe uses k=$k"))
     // the LIVE view (store minus tombstones): deleted/purged docs must not
     // veto near-identical future docs — see deleteFromSignatureStore
-    val store = ensureFns(liveSignatures(spark, storePath, idCol))
+    val store = ensureFns(withoutTombstones(raw, storePath, idCol))
     val sBand = withBandHashes(store, bands, r)
       .select(col(idCol).as("b"), explode(col("bands")).as("band"))
     val bSh = shingleTable(batch, idCol)
@@ -3809,7 +3908,9 @@ object LlmOps {
       else corpus
     val candCorpus = prunable.join(cand.select(col("b")),
       prunable(idCol) === col("b"), "left_semi")
-    val cSh = shingleTable(candCorpus, idCol)
+    // the candidate corpus shingles have ONE consumer (the verify join):
+    // the same expressions as shingleTable, unpersisted
+    val cSh = withShingles(withWords(candCorpus)).select(col(idCol), col("shingles"))
     val out = cand
       .join(bSh.select(col(idCol).as("a"), col("shingles").as("sa")), "a")
       .join(cSh.select(col(idCol).as("b"), col("shingles").as("sb")), "b")
@@ -3819,7 +3920,6 @@ object LlmOps {
     out.count() // materialize BEFORE dropping the caches it derives from
     cand.unpersist()
     bSh.unpersist()
-    cSh.unpersist()
     out
   }
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, Fl
 /** Native Catalyst expression for the embedding dot product (north-star
   * similarity ops). Spark's generic route — `aggregate(zip_with(a, b, …))` —
   * evaluates interpreted (higher-order functions never enter codegen) and
-  * allocates a zipped array per row; this expression generates a tight
-  * primitive loop inside whole-stage codegen.
+  * allocates a zipped array per row; this expression runs a tight
+  * primitive loop inside whole-stage codegen ([[DotOps]] for float/double
+  * arrays).
   *
   * Semantics match the HOF form exactly, including the degenerate cases:
   * each element is widened to double BEFORE multiply, accumulation runs in
@@ -97,24 +98,79 @@ case class DotProduct(left: Expression, right: Expression)
         if (mayHaveNullElems)
           s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
         else ""
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullCheck
-         |    $acc += ${getter(lt, a, i)} * ${getter(rt, b, i)};
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
+      // float/double rows call the precompiled loop in [[DotOps]]: it stays
+      // JIT-compiled across generated classes, whereas a loop inlined here
+      // runs interpreted in every freshly compiled class — and a long-lived
+      // session recompiles stage classes whenever Spark's codegen cache
+      // (100 entries by default) evicts them
+      if (lt != ByteType && rt != ByteType) {
+        val nulls =
+          if (mayHaveNullElems)
+            s" || graft.functions.DotOps.anyNull($a) || graft.functions.DotOps.anyNull($b)"
+          else ""
+        s"""
+           |if ($a.numElements() != $b.numElements()$nulls) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  ${ev.value} = graft.functions.DotOps.${DotOps.kernel(lt, rt)}($a, $b);
+           |}
+         """.stripMargin
+      } else
+        s"""
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  double $acc = 0.0;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    $nullCheck
+           |    $acc += ${getter(lt, a, i)} * ${getter(rt, b, i)};
+           |  }
+           |  if (!${ev.isNull}) ${ev.value} = $acc;
+           |}
+         """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** [[DotProduct]]'s loops over equal-length, null-free float/double
+  * arrays: each element widened to double before the multiply, summed in
+  * array order — the arithmetic of the generated tinyint loop and of
+  * `nullSafeEval`.
+  */
+object DotOps {
+  def kernel(l: DataType, r: DataType): String =
+    s"dot${if (l == FloatType) "F" else "D"}${if (r == FloatType) "F" else "D"}"
+
+  def anyNull(a: ArrayData): Boolean = {
+    var i = 0; val n = a.numElements()
+    while (i < n) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
+  def dotFF(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
+    s
+  }
+  def dotFD(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getFloat(i).toDouble * b.getDouble(i); i += 1 }
+    s
+  }
+  def dotDF(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getDouble(i) * b.getFloat(i).toDouble; i += 1 }
+    s
+  }
+  def dotDD(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+    s
+  }
 }
 
 /** Static runtime for the hash expressions' generated code: the single

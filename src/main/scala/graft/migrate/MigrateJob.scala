@@ -107,6 +107,15 @@ object MigrateJob {
           s"error budget exceeded: ${acc.value} > $limit")
   }
 
+  private val watchSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A budget-watcher job group id unique in this JVM: `label` plus a
+    * process-wide sequence number, one per watched action (per table, run
+    * and wave).
+    */
+  private[migrate] def watchTag(label: String): String =
+    s"$label-${watchSeq.incrementAndGet()}"
+
   /** Drive `body` (a Spark action) under a budget watcher: a driver-side
     * thread polls the merged error accumulator while the action runs and
     * cancels the action's job group the moment the budget is blown —
@@ -116,7 +125,10 @@ object MigrateJob {
     * after the earliest finished tasks push the total over the limit —
     * the remaining tasks of the wave are killed instead of running the
     * migration to completion first. Cancellation via job group keeps the
-    * blast radius to this wave's jobs only.
+    * blast radius to this wave's jobs only — provided `groupTag` is unique
+    * to this action: the library's call sites pass [[watchTag]], since
+    * migrateAll runs tables concurrently and two tables' waves can start at
+    * the same bucket.
     */
   private[migrate] def withBudgetWatcher[T](spark: SparkSession,
                                             errors: LongAccumulator,
@@ -676,7 +688,7 @@ object MigrateJob {
     def writeWave(): Unit = sink.writeWave(pass, wave)
     if (midWaveBudget)
       withBudgetWatcher(spark, errors, cfg.errorLimit,
-        s"graft-migrate-wave-${wave.headOption.getOrElse(0)}")(writeWave())
+        watchTag(s"graft-migrate-wave-${wave.headOption.getOrElse(0)}"))(writeWave())
     else writeWave()
     val metrics = obs.get
     // the write itself routed by the pre-transform snapshot, so the data on

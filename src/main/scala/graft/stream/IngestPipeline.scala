@@ -164,14 +164,16 @@ object IngestPipeline {
       intra.select(col("b").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
     // FS-agnostic existence probes: first batch has neither a landed
-    // corpus nor a store — everything survives and seeds both
-    val landed = scala.util.Try(
-      spark.read.parquet(cfg.targetPath).select(col("doc_id"), col("text")))
-    val storeReadable = scala.util.Try(spark.read.parquet(storePath)).isSuccess
+    // corpus nor a store — everything survives and seeds both. Existence
+    // is checked explicitly; a corpus or store that exists but cannot be
+    // read fails the batch instead of letting every doc through.
+    val primed = LlmOps.pathExists(spark, cfg.targetPath) &&
+      LlmOps.pathExists(spark, storePath)
     val survivors =
-      if (landed.isFailure || !storeReadable) afterIntra.persist()
+      if (!primed) afterIntra.persist()
       else {
-        val dupes = LlmOps.incrementalDupes(landed.get,
+        val landed = spark.read.parquet(cfg.targetPath).select(col("doc_id"), col("text"))
+        val dupes = LlmOps.incrementalDupes(landed,
           afterIntra.select(col("doc_id"), col("text")), "doc_id",
           storePath, nearDupThreshold)
         // replay ghost exclusion: a failed first attempt already appended

@@ -55,7 +55,7 @@ object DumpPlans {
       "distinct_users_sketch" -> "persisted-sketch distinct (r11, envelope r12): per-day HLL sketches build in one hash agg (datasketches buffers combine map-side), the union agg merges |days| KB-sized sketches — the events table is never re-shuffled; at 100 TB the daily sketches persist and the merge reads NO events. The registry output adds an exact countDistinct harness pass (1-row × 1-row BNLJ attach) so the driver gate sees a three-axis row — verification cost, not the scale path",
       "embedding_health_approx" -> "the 100 TB embedding-QA regime FORCED at sf scale (r12): approx_percentile sketch aggregates — merge-able, bounded buffer, no single-task value multiset — plus a 1-row exact-percentile harness attach (norms_ok ≤5%); both sides are groupless global aggregates, ONE corpus scan each",
       "profile_table_approx" -> "the 100 TB profile regime FORCED at sf scale (r12): approx_count_distinct at rsd 0.023 (precision 12; r15) — single-pass partials, NO Expand (the exact form multiplies map output ×(cols+1)) — joined to the exact-distinct harness on the 4-row col_name table (nd_ok ≤5%)",
-      "sim_search_batch" -> "batched trained-IVF serving (r12): the Q-query batch ranks the c-row broadcast centroid table (Q×c bounded nested loop), the Q·nprobe probe list equi-joins the corpus assignment on cid — ONE corpus pass for the whole batch, each vector fans out only to the queries probing its cell — and per-query top-k runs on the graft_topk bounded heap (map-side eviction, Q·k exchange rows); the batch side is gated at QueryBatchMaxRows",
+      "sim_search_batch" -> "batched trained-IVF serving (r12): the Q-query batch is collected once and ranks the c-row centroid table on the driver (no ranking job), the Q·nprobe probe list and the batch return as broadcast local relations and equi-join the corpus assignment on cid — ONE corpus pass for the whole batch, each vector fans out only to the queries probing its cell — and per-query top-k runs on the graft_topk bounded heap (map-side eviction, Q·k exchange rows); the batch side is gated at QueryBatchMaxRows",
       "small_files_report" -> "storage-layout audit (r12, write shape fixed r13): the controlled write is salted by doc_id % 16 and partitioned by (lang, b) through an EXPLICIT repartition(32, lang, b) — AQE-coalesce-exempt, each salt group wholly in one task owning its directory, so file rolls stay closed-form (ceil(cnt/100) per group) while write tasks scale with lang × buckets, never one per lang — then re-read through input_file_name(); two map-combined hash aggregates — per-file counts leave the map side as one row per (lang, file), the report is langs-sized",
       "compact_files" -> "small-files compaction (r13): lands the 16-bucket small layout, rewrites it through a 4-bucket salt at maxRecordsPerFile=1000 (scan → narrow salt column → one explicit (lang, b) exchange → write — the rewrite the report prices), audits BOTH layouts from disk via input_file_name(); audits are map-combined aggregates joined on the 5-row lang table, rows_ok pins content preservation",
       "migrate_report" -> "multi-table migrate orchestration (r13): MigrateJob.migrateAll drives the single-table pipeline per table — each table keeps the narrow scan → tag → transform → dynamic-partition write shape with its own ledger — under one consolidated error budget; the report itself is a 4-row createDataFrame of ledger-derived totals, exchange-free beyond the per-table migrate jobs",

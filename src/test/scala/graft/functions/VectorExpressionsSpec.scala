@@ -61,6 +61,14 @@ class VectorExpressionsSpec extends SparkSpec {
       .toDF("a", "b")
       .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof")).collect().head
     assert(withNullElem.isNullAt(0) && withNullElem.isNullAt(1))
+    // the same cases through whole-stage codegen (a local relation is
+    // evaluated interpreted): mismatch, a null element, float × double
+    val gen = spark.range(1).select(
+      expr("graft_dot(array(id + 1.0f, 2.0f), array(id + 3.0f))").as("mism"),
+      expr("graft_dot(array(id + 1.0f, cast(null as float)), array(3.0f, id + 4.0f))").as("nullElem"),
+      expr("graft_dot(array(id + 1.5f, 2.0f), array(3.0d, id + 4.0d))").as("fd")).collect().head
+    assert(gen.isNullAt(0) && gen.isNullAt(1))
+    assert(gen.getDouble(2) == 1.5 * 3.0 + 2.0 * 4.0)
   }
 
   test("graft_hash_array: null elements hash to null, like the transform form") {

@@ -114,4 +114,36 @@ class MigrateAllSpec extends SparkSpec {
       "tables after the global-budget breach must not run")
     assert(out.find(_.table_name == "orders").get.error.get.contains("global error budget"))
   }
+
+  test("a budget breach in one table cancels only its own wave: a sibling " +
+       "writing concurrently under its own budget watcher ends done") {
+    val base = Files.createTempDirectory("graft-mall-collide").toString
+    // Both tables are guarded with a finite limit, so both writes run under
+    // a budget watcher, and both first waves start at bucket 0. Writes are
+    // rate-limited to 10 rows/s per partition, and all partitions fit the
+    // 4 local cores at once. `breach` has two 20-row partitions with 2
+    // oversize rows each (never more than the limit in one task) and one
+    // 60-row partition: after ~2 s the cross-task total passes the limit
+    // while its own long task — and `sibling`'s 60-row write — still run.
+    def table(name: String, src: org.apache.spark.sql.DataFrame) =
+      MigrateJob.TableMigration(name,
+        DataFrameSource(src.select(col("id").as("pk"),
+          when(col("id") < 1000 && col("id") % 10 === 0, lit("x" * 200))
+            .otherwise(lit("y")).as("payload"))),
+        ParquetBucketSink(s"$base/$name"),
+        MigrateJob.Config(pkCols = Seq("pk"), tokenBuckets = 4,
+          guardrailMaxRowBytes = Some(100L), errorLimit = 3L,
+          maxRowsPerSecondPerPartition = Some(10)))
+    val out = MigrateJob.migrateAll(spark, Seq(
+      table("breach", spark.range(0, 40, 1, 2).union(spark.range(1000, 1060, 1, 1)).toDF()),
+      table("sibling", spark.range(1000, 1060, 1, 1).toDF())))
+    val byName = out.map(o => o.table_name -> o).toMap
+    assert(byName("breach").status == "failed")
+    assert(byName("breach").error.exists(_.contains("error budget exceeded mid-wave")),
+      s"breach error: ${byName("breach").error}")
+    assert(byName("sibling").status == "done",
+      s"the sibling's wave must not be cancelled by the other table's " +
+        s"watcher: ${byName("sibling").error}")
+    assert(byName("sibling").migrated == 60L && byName("sibling").skipped == 0L)
+  }
 }

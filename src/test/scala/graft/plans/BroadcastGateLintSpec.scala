@@ -66,11 +66,13 @@ class BroadcastGateLintSpec extends AnyFunSuite {
     ("ap.crossJoin(broadcast(ex))",
       "LlmQueries.embedding_health_approx: groupless exact-percentile harness aggregate — exactly 1 row"),
     ("q.crossJoin(broadcast(withCnorm(cents)))",
-      "LlmOps.ivfSearchBatch: the c-row centroid table (CentroidBudgetBytes contract); probe side gated at QueryBatchMaxRows"),
-    (".join(broadcast(probed), \"cid\")",
-      "LlmOps.ivfSearchBatch: the Q·nprobe probe list — bounded by the QueryBatchMaxRows gate × the nprobe literal"),
-    (".join(broadcast(q), \"qid\")",
-      "LlmOps.ivfSearchBatch: the query batch — gated at QueryBatchMaxRows (require before any broadcast)"),
+      "LlmOps.probeCells distributed ranking (past LocalCentroidMaxBytes): the c-row centroid table (CentroidBudgetBytes contract); the query side is ≤ QueryBatchMaxRows rows"),
+    (".join(broadcast(p.probes), \"cid\")",
+      "LlmOps.probedTopK: the driver-local probe list — ≤ QueryBatchMaxRows × nprobe rows (probeCells' require × the nprobe literal)"),
+    (".join(broadcast(p.queries), \"qid\")",
+      "LlmOps.probedTopK: the driver-local query batch — ≤ QueryBatchMaxRows rows (probeCells' bounded collect + require)"),
+    (".crossJoin(broadcast(p.queries))",
+      "LlmOps.annAssignedSearch: the driver-local query relation — ≤ QueryBatchMaxRows rows (probeCells' bounded collect + require); one row by contract"),
     ("crossJoin(broadcast(tots))",
       "LlmOps.dsirSelect: groupless global word-total aggregate — exactly 1 row"),
     ("crossJoin(broadcast(nRef))",

@@ -407,10 +407,6 @@ class PlanAuditSpec extends SparkSpec {
       // 1-row approx-health summary × 1-row exact-percentile harness
       // (LlmQueries: ap.crossJoin(broadcast(ex)) — both groupless)
       "embedding_health_approx",
-      // Q×c centroid ranking (LlmOps.ivfSearchBatch: the query batch —
-      // gated at QueryBatchMaxRows — against the c-row centroid table;
-      // both sides bounded, the corpus side joins by equi-key only)
-      "sim_search_batch",
       // 1-row total-label-count attach (LlmOps.clusterSizeStats:
       // crossJoin(broadcast(tot)) — the lmScore pattern; histogram and
       // total are both report-sized)
