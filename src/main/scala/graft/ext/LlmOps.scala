@@ -2573,12 +2573,11 @@ object LlmOps {
         // Spark SQL's `cnrm > 0` is true for NaN (NaN sorts largest)
         val kept = cs.map { case (cid, cv) => (cid, l2norm(cv), cv) }
           .filter { case (_, n, _) => n > 0 || n.isNaN }
+        val ranker = new ProbeRanker(kept.map(_._1).toArray, kept.map(_._2).toArray,
+          kept.map(_._3).toArray, nprobe)
         qRows.flatMap { r =>
-          val qv = r.getSeq[Double](1).toArray
-          val qn = r.getDouble(2)
-          kept.collect { case (cid, cn, cv) if cv.length == qv.length =>
-            (round6d(dotLocal(qv, cv) / (qn * cn)), cid)
-          }.sorted(probeOrder).take(nprobe).map { case (_, cid) => Row(r.get(0), cid) }
+          ranker.top(r.getSeq[Double](1).toArray, r.getDouble(2))
+            .map(cid => Row(r.get(0), cid))
         }
       case None =>
         q.crossJoin(broadcast(withCnorm(cents)))
@@ -2594,12 +2593,71 @@ object LlmOps {
     ProbePlan(q, probes, probeRows.map(_.getInt(1)).distinct)
   }
 
-  /** (ccos desc, cid asc) under Spark's double ordering: NaN largest,
-    * -0.0 == 0.0 — the order graft_topk keeps.
+  /** The `nprobe` best of a fixed cell set per query, in graft_topk's
+    * order: (ccos desc, cid asc) under Spark's double ordering — NaN
+    * largest, -0.0 == 0.0. A bounded heap over primitive arrays (root = the
+    * worst kept cell), so a query costs c dots and O(c·log nprobe)
+    * comparisons with no per-cell allocation; cells of another dimension
+    * (a null cosine) are skipped.
     */
-  private val probeOrder: Ordering[(Double, Int)] = (a, b) => {
-    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(b._1, a._1)
-    if (c != 0) c else Integer.compare(a._2, b._2)
+  private final class ProbeRanker(cids: Array[Int], cnrms: Array[Double],
+                                  cvecs: Array[Array[Double]], nprobe: Int) {
+    private val m = math.min(nprobe, cids.length)
+    private val hc = new Array[Double](m)
+    private val hi = new Array[Int](m)
+    private var n = 0
+
+    private def before(c1: Double, id1: Int, c2: Double, id2: Int): Boolean = {
+      val c = if (c1 == c2) 0 else java.lang.Double.compare(c2, c1)
+      c < 0 || (c == 0 && id1 < id2)
+    }
+    // heap slot a holds a worse cell than slot b
+    private def worse(a: Int, b: Int): Boolean = before(hc(b), hi(b), hc(a), hi(a))
+    private def swap(a: Int, b: Int): Unit = {
+      val c = hc(a); hc(a) = hc(b); hc(b) = c
+      val i = hi(a); hi(a) = hi(b); hi(b) = i
+    }
+    private def siftDown(): Unit = {
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        var w = i
+        if (l < n && worse(l, w)) w = l
+        if (l + 1 < n && worse(l + 1, w)) w = l + 1
+        if (w == i) done = true else { swap(i, w); i = w }
+      }
+    }
+
+    /** The query's probe cids, best first. */
+    def top(qv: Array[Double], qn: Double): Array[Int] = {
+      n = 0
+      var j = 0
+      while (j < cids.length) {
+        if (cvecs(j).length == qv.length) {
+          val c = round6d(dotLocal(qv, cvecs(j)) / (qn * cnrms(j)))
+          if (n < m) {
+            hc(n) = c; hi(n) = cids(j)
+            var i = n
+            n += 1
+            while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+          } else if (m > 0 && before(c, cids(j), hc(0), hi(0))) {
+            hc(0) = c; hi(0) = cids(j)
+            siftDown()
+          }
+        }
+        j += 1
+      }
+      // drain worst first into the back of the result
+      val out = new Array[Int](n)
+      while (n > 0) {
+        out(n - 1) = hi(0)
+        n -= 1
+        hc(0) = hc(n); hi(0) = hi(n)
+        siftDown()
+      }
+      out
+    }
   }
 
   /** A centroid table's rows for driver-side use, within
@@ -3763,26 +3821,37 @@ object LlmOps {
   }
 
   /** First row's signature length of the store at `path`, or None when the
-    * store doesn't exist yet (an explicit existence check — any other read
-    * failure propagates). The store is k-uniform by construction
+    * store holds no data yet (an explicit check, [[hasDataFiles]] — any
+    * other read failure propagates). The store is k-uniform by construction
     * ([[writeSignatures]] validates appends), so one row suffices.
     */
   private def storeSigLen(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[Int] =
-    if (pathExists(spark, path)) sigLen(spark.read.parquet(path)) else None
+    if (hasDataFiles(spark, path)) sigLen(spark.read.parquet(path)) else None
 
   private def sigLen(store: DataFrame): Option[Int] =
     store.select(size(col("sig"))).limit(1).collect().headOption.map(_.getInt(0))
 
-  /** Whether `path` exists on its file system — the explicit "not written
-    * yet" probe of the store family, so a store that is absent reads as
-    * absent without a failed read (and its logged stack trace), while a
-    * store that exists but cannot be read fails loudly.
+  /** Whether `path` holds at least one data file — the explicit "not
+    * written yet" probe of the store family. A path that is absent, or that
+    * an aborted write left without data (only hidden entries such as
+    * `_temporary`), reads as absent without a failed read and its logged
+    * stack trace; a path with data that cannot be read fails loudly.
+    * Hidden names are Spark's file-index rule: `.`-prefixed, or
+    * `_`-prefixed unless a partition directory (`=`). The walk stops at the
+    * first data file.
     */
-  private[graft] def pathExists(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  private[graft] def hasDataFiles(spark: org.apache.spark.sql.SparkSession,
+                                  path: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String): Boolean =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def holds(dir: Path): Boolean = fs.listStatus(dir).exists { st =>
+      !hidden(st.getPath.getName) && (st.isFile || holds(st.getPath))
+    }
+    fs.exists(p) && (fs.getFileStatus(p).isFile || holds(p))
   }
 
   // ---- signature store lifecycle: delete / compact ----
@@ -3816,14 +3885,14 @@ object LlmOps {
     withoutTombstones(spark.read.parquet(path), path, idCol)
 
   /** `store` (the frame read from `path`) minus the tombstone sidecar when
-    * one exists; an existing but unreadable sidecar fails the read rather
-    * than resurrecting deleted docs.
+    * it holds data; a sidecar with data that cannot be read fails the read
+    * rather than resurrecting deleted docs.
     */
   private def withoutTombstones(store: DataFrame, path: String,
                                 idCol: String): DataFrame = {
     val spark = store.sparkSession
     val ts = storeTombstonePath(path)
-    if (!pathExists(spark, ts)) store
+    if (!hasDataFiles(spark, ts)) store
     else store.join(spark.read.parquet(ts).select(col(idCol)), Seq(idCol), "left_anti")
   }
 

@@ -11,8 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, Fl
   * similarity ops). Spark's generic route — `aggregate(zip_with(a, b, …))` —
   * evaluates interpreted (higher-order functions never enter codegen) and
   * allocates a zipped array per row; this expression runs a tight
-  * primitive loop inside whole-stage codegen ([[DotOps]] for float/double
-  * arrays).
+  * primitive loop ([[DotOps]]) inside whole-stage codegen.
   *
   * Semantics match the HOF form exactly, including the degenerate cases:
   * each element is widened to double BEFORE multiply, accumulation runs in
@@ -57,78 +56,38 @@ case class DotProduct(left: Expression, right: Expression)
     case _ => true
   }
 
-  private def get(xs: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType => xs.getFloat(i).toDouble
-    case ByteType => xs.getByte(i).toDouble
-    case _ => xs.getDouble(i)
-  }
-
   override def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    if (n != ys.numElements()) return null
-    val (lt, rt) = (elemType(left).get, elemType(right).get)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
-      acc += get(xs, i, lt) * get(ys, i, rt)
-      i += 1
-    }
-    acc
+    if (xs.numElements() != ys.numElements() || DotOps.anyNull(xs) || DotOps.anyNull(ys))
+      null
+    else evalDot(xs, ys)
   }
 
-  private def getter(t: DataType, arr: String, i: String): String = t match {
-    case FloatType => s"((double) $arr.getFloat($i))"
-    case ByteType => s"((double) $arr.getByte($i))"
-    case _ => s"$arr.getDouble($i)"
-  }
+  @transient private lazy val evalDot =
+    DotOps.fn(elemType(left).get, elemType(right).get)
 
+  // the generated code calls the precompiled loop in [[DotOps]]: it stays
+  // JIT-compiled across generated classes, whereas a loop inlined here runs
+  // interpreted in every freshly compiled class — and a long-lived session
+  // recompiles stage classes whenever Spark's codegen cache (100 entries by
+  // default) evicts them
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val (lt, rt) = (elemType(left).get, elemType(right).get)
-      // element null checks only generated when the schema admits nulls —
-      // parquet embeddings are containsNull=false, so the hot loop stays
-      // branch-free
-      val nullCheck =
+      // element null scans only generated when the schema admits nulls —
+      // parquet embeddings are containsNull=false
+      val nulls =
         if (mayHaveNullElems)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+          s" || graft.functions.DotOps.anyNull($a) || graft.functions.DotOps.anyNull($b)"
         else ""
-      // float/double rows call the precompiled loop in [[DotOps]]: it stays
-      // JIT-compiled across generated classes, whereas a loop inlined here
-      // runs interpreted in every freshly compiled class — and a long-lived
-      // session recompiles stage classes whenever Spark's codegen cache
-      // (100 entries by default) evicts them
-      if (lt != ByteType && rt != ByteType) {
-        val nulls =
-          if (mayHaveNullElems)
-            s" || graft.functions.DotOps.anyNull($a) || graft.functions.DotOps.anyNull($b)"
-          else ""
-        s"""
-           |if ($a.numElements() != $b.numElements()$nulls) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = graft.functions.DotOps.${DotOps.kernel(lt, rt)}($a, $b);
-           |}
-         """.stripMargin
-      } else
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  double $acc = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    $nullCheck
-           |    $acc += ${getter(lt, a, i)} * ${getter(rt, b, i)};
-           |  }
-           |  if (!${ev.isNull}) ${ev.value} = $acc;
-           |}
-         """.stripMargin
+      val kernel = DotOps.kernel(elemType(left).get, elemType(right).get)
+      s"""
+         |if ($a.numElements() != $b.numElements()$nulls) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.DotOps.$kernel($a, $b);
+         |}
+       """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
@@ -136,20 +95,32 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** [[DotProduct]]'s loops over equal-length, null-free float/double
-  * arrays: each element widened to double before the multiply, summed in
-  * array order — the arithmetic of the generated tinyint loop and of
-  * `nullSafeEval`.
+/** [[DotProduct]]'s loops over equal-length, null-free arrays, one per
+  * (float|double|tinyint)² element-type pair: each element widened to
+  * double before the multiply, summed in array order. Generated code calls
+  * the kernel by name ([[kernel]]); interpreted evaluation through
+  * [[fn]].
   */
 object DotOps {
-  def kernel(l: DataType, r: DataType): String =
-    s"dot${if (l == FloatType) "F" else "D"}${if (r == FloatType) "F" else "D"}"
+  private def code(t: DataType): String = t match {
+    case FloatType => "F"
+    case ByteType => "B"
+    case _ => "D"
+  }
+  def kernel(l: DataType, r: DataType): String = s"dot${code(l)}${code(r)}"
 
   def anyNull(a: ArrayData): Boolean = {
     var i = 0; val n = a.numElements()
     while (i < n) { if (a.isNullAt(i)) return true; i += 1 }
     false
   }
+
+  def fn(l: DataType, r: DataType): (ArrayData, ArrayData) => Double =
+    kernel(l, r) match {
+      case "dotFF" => dotFF; case "dotFD" => dotFD; case "dotFB" => dotFB
+      case "dotDF" => dotDF; case "dotDD" => dotDD; case "dotDB" => dotDB
+      case "dotBF" => dotBF; case "dotBD" => dotBD; case _ => dotBB
+    }
 
   def dotFF(a: ArrayData, b: ArrayData): Double = {
     var s = 0.0; var i = 0; val n = a.numElements()
@@ -161,6 +132,11 @@ object DotOps {
     while (i < n) { s += a.getFloat(i).toDouble * b.getDouble(i); i += 1 }
     s
   }
+  def dotFB(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getFloat(i).toDouble * b.getByte(i).toDouble; i += 1 }
+    s
+  }
   def dotDF(a: ArrayData, b: ArrayData): Double = {
     var s = 0.0; var i = 0; val n = a.numElements()
     while (i < n) { s += a.getDouble(i) * b.getFloat(i).toDouble; i += 1 }
@@ -169,6 +145,26 @@ object DotOps {
   def dotDD(a: ArrayData, b: ArrayData): Double = {
     var s = 0.0; var i = 0; val n = a.numElements()
     while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+    s
+  }
+  def dotDB(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getDouble(i) * b.getByte(i).toDouble; i += 1 }
+    s
+  }
+  def dotBF(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getByte(i).toDouble * b.getFloat(i).toDouble; i += 1 }
+    s
+  }
+  def dotBD(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getByte(i).toDouble * b.getDouble(i); i += 1 }
+    s
+  }
+  def dotBB(a: ArrayData, b: ArrayData): Double = {
+    var s = 0.0; var i = 0; val n = a.numElements()
+    while (i < n) { s += a.getByte(i).toDouble * b.getByte(i).toDouble; i += 1 }
     s
   }
 }

@@ -199,7 +199,7 @@ final case class GraftBatchTarget(baseDir: String,
         .mode("append").save()
     if (errorLimit < Long.MaxValue)
       MigrateJob.withBudgetWatcher(spark, errors, errorLimit,
-        MigrateJob.watchTag(s"graft-connector-write-${wave.headOption.getOrElse(0)}"))(save())
+        s"graft-connector-write-${wave.headOption.getOrElse(0)}")(save())
     else save()
   }
 

@@ -109,13 +109,6 @@ object MigrateJob {
 
   private val watchSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** A budget-watcher job group id unique in this JVM: `label` plus a
-    * process-wide sequence number, one per watched action (per table, run
-    * and wave).
-    */
-  private[migrate] def watchTag(label: String): String =
-    s"$label-${watchSeq.incrementAndGet()}"
-
   /** Drive `body` (a Spark action) under a budget watcher: a driver-side
     * thread polls the merged error accumulator while the action runs and
     * cancels the action's job group the moment the budget is blown —
@@ -125,8 +118,8 @@ object MigrateJob {
     * after the earliest finished tasks push the total over the limit —
     * the remaining tasks of the wave are killed instead of running the
     * migration to completion first. Cancellation via job group keeps the
-    * blast radius to this wave's jobs only — provided `groupTag` is unique
-    * to this action: the library's call sites pass [[watchTag]], since
+    * blast radius to this wave's jobs only: the group id is `groupTag` plus
+    * a process-wide sequence number, unique per watched action, since
     * migrateAll runs tables concurrently and two tables' waves can start at
     * the same bucket.
     */
@@ -145,7 +138,8 @@ object MigrateJob {
     val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
     val prevDesc = sc.getLocalProperty("spark.job.description")
     val prevInterrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    sc.setJobGroup(groupTag, "graft migrate wave (error-budget watched)",
+    val group = s"$groupTag-${watchSeq.incrementAndGet()}"
+    sc.setJobGroup(group, "graft migrate wave (error-budget watched)",
       interruptOnCancel = true)
     val watcher = new Thread({ () =>
       // keep cancelling until the action thread returns: cancelJobGroup
@@ -153,7 +147,7 @@ object MigrateJob {
       // between two of the wave's jobs (or before the first is submitted)
       // must re-fire for the next submission. Cancellation is idempotent.
       while (!done) {
-        if (errors.value > limit) { breached = true; sc.cancelJobGroup(groupTag) }
+        if (errors.value > limit) { breached = true; sc.cancelJobGroup(group) }
         Thread.sleep(20)
       }
     }: Runnable)
@@ -688,7 +682,7 @@ object MigrateJob {
     def writeWave(): Unit = sink.writeWave(pass, wave)
     if (midWaveBudget)
       withBudgetWatcher(spark, errors, cfg.errorLimit,
-        watchTag(s"graft-migrate-wave-${wave.headOption.getOrElse(0)}"))(writeWave())
+        s"graft-migrate-wave-${wave.headOption.getOrElse(0)}")(writeWave())
     else writeWave()
     val metrics = obs.get
     // the write itself routed by the pre-transform snapshot, so the data on

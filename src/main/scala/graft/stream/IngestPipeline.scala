@@ -164,11 +164,12 @@ object IngestPipeline {
       intra.select(col("b").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
     // FS-agnostic existence probes: first batch has neither a landed
-    // corpus nor a store — everything survives and seeds both. Existence
-    // is checked explicitly; a corpus or store that exists but cannot be
-    // read fails the batch instead of letting every doc through.
-    val primed = LlmOps.pathExists(spark, cfg.targetPath) &&
-      LlmOps.pathExists(spark, storePath)
+    // corpus nor a store — everything survives and seeds both. A path an
+    // aborted attempt left without data files counts as absent, so the
+    // replay re-seeds; a corpus or store with data that cannot be read
+    // fails the batch instead of letting every doc through.
+    val primed = LlmOps.hasDataFiles(spark, cfg.targetPath) &&
+      LlmOps.hasDataFiles(spark, storePath)
     val survivors =
       if (!primed) afterIntra.persist()
       else {

@@ -62,13 +62,22 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof")).collect().head
     assert(withNullElem.isNullAt(0) && withNullElem.isNullAt(1))
     // the same cases through whole-stage codegen (a local relation is
-    // evaluated interpreted): mismatch, a null element, float × double
+    // evaluated interpreted): mismatch, a null element, float × double,
+    // and the tinyint kernels
     val gen = spark.range(1).select(
       expr("graft_dot(array(id + 1.0f, 2.0f), array(id + 3.0f))").as("mism"),
       expr("graft_dot(array(id + 1.0f, cast(null as float)), array(3.0f, id + 4.0f))").as("nullElem"),
-      expr("graft_dot(array(id + 1.5f, 2.0f), array(3.0d, id + 4.0d))").as("fd")).collect().head
-    assert(gen.isNullAt(0) && gen.isNullAt(1))
+      expr("graft_dot(array(id + 1.5f, 2.0f), array(3.0d, id + 4.0d))").as("fd"),
+      expr("graft_dot(array(cast(id + 2 as tinyint), cast(null as tinyint)), array(1.0d, 2.0d))")
+        .as("byteNull"),
+      expr("graft_dot(array(cast(id + 2 as tinyint), -3Y), array(cast(id + 4 as tinyint), 5Y))")
+        .as("bb"),
+      expr("graft_dot(array(cast(id - 2 as tinyint), 3Y), array(id + 0.5f, 2.0f))").as("bf"))
+      .collect().head
+    assert(gen.isNullAt(0) && gen.isNullAt(1) && gen.isNullAt(3))
     assert(gen.getDouble(2) == 1.5 * 3.0 + 2.0 * 4.0)
+    assert(gen.getDouble(4) == 2.0 * 4.0 - 3.0 * 5.0)
+    assert(gen.getDouble(5) == -2.0 * 0.5 + 3.0 * 2.0)
   }
 
   test("graft_hash_array: null elements hash to null, like the transform form") {

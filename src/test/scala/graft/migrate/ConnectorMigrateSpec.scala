@@ -150,12 +150,14 @@ class ConnectorMigrateSpec extends SparkSpec {
     val sc = spark.sparkContext
     val accOuter = sc.longAccumulator("nest_outer")
     val accInner = sc.longAccumulator("nest_inner")
+    // group ids are the tag plus a per-action sequence number
     MigrateJob.withBudgetWatcher(spark, accOuter, 100L, "nest-outer") {
-      assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-outer")
+      val outer = sc.getLocalProperty("spark.jobGroup.id")
+      assert(outer.startsWith("nest-outer-"))
       MigrateJob.withBudgetWatcher(spark, accInner, 100L, "nest-inner") {
-        assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-inner")
+        assert(sc.getLocalProperty("spark.jobGroup.id").startsWith("nest-inner-"))
       }
-      assert(sc.getLocalProperty("spark.jobGroup.id") == "nest-outer",
+      assert(sc.getLocalProperty("spark.jobGroup.id") == outer,
         "inner watcher must restore the enclosing job group, not strip it")
     }
     assert(sc.getLocalProperty("spark.jobGroup.id") == null)

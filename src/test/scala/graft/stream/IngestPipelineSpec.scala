@@ -128,6 +128,42 @@ class IngestPipelineSpec extends SparkSpec {
     assert(landedIds == Set(1L, 10L), s"second replay kept=$landedIds")
   }
 
+  test("ingest with store: replay of a first batch whose attempt left an " +
+       "empty target or store directory re-seeds both") {
+    import spark.implicits._
+    val other =
+      "completely different corpus content about spark catalyst tungsten codegen and shuffles everywhere"
+    val batch = Seq((1L, other), (10L, good)).toDF("doc_id", "text")
+    // an aborted write leaves its output directory behind with no data
+    // files, only the committer's hidden staging directory
+    def aborted(dir: String): Unit = Files.createDirectories(
+      java.nio.file.Paths.get(dir, "_temporary", "0"))
+    def attempt(name: String)(firstAttempt: IngestPipeline.Config => Unit): Unit = {
+      val base = tmp()
+      val cfg = IngestPipeline.Config(
+        originPath = s"$base/origin", targetPath = s"$base/target",
+        checkpoint = s"$base/ckpt")
+      val store = s"$base/store"
+      firstAttempt(cfg)
+      aborted(store)
+      IngestPipeline.landBatchWithStore(batch, 0L, cfg, store, 0.5)
+      def ids(path: String) = spark.read.parquet(path)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids(cfg.targetPath) == Set(1L, 10L), s"$name: replay landed")
+      assert(ids(store) == Set(1L, 10L), s"$name: replay seeded the store")
+      // the replayed corpus and store serve the next batch's probe
+      IngestPipeline.landBatchWithStore(
+        Seq((11L, good + " again")).toDF("doc_id", "text"), 1L, cfg, store, 0.5)
+      assert(ids(cfg.targetPath) == Set(1L, 10L), s"$name: near-dup of 10 dropped")
+    }
+    // the sinks landed, the store append aborted
+    attempt("store aborted") { cfg =>
+      DualWrite.dualWriteMicroBatch(batch, 0L, cfg.originPath, cfg.targetPath)
+    }
+    // the target write aborted before anything landed
+    attempt("target aborted")(cfg => aborted(s"${cfg.targetPath}/batch=0"))
+  }
+
   test("gateAndFingerprint is batch/stream agnostic and deterministic") {
     import spark.implicits._
     val cfg = IngestPipeline.Config(originPath = "", targetPath = "", checkpoint = "")
